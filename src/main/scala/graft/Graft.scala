@@ -734,8 +734,8 @@ object Graft {
   /** ABC / Pareto classification summary (see
     * [[operators.Olap.abcSummary]]). */
   def abcSummary(byEntity: DataFrame, idCol: String,
-      revCol: String): DataFrame =
-    operators.Olap.abcSummary(byEntity, idCol, revCol)
+      centsCol: String): DataFrame =
+    operators.Olap.abcSummary(byEntity, idCol, centsCol)
 
   /** Materialize a base snapshot + sequenced I/U/D change stream into
     * the final table — the lakehouse MERGE shape (see

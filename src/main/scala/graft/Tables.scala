@@ -1,12 +1,16 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicReference
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the TPC-H-ish star schema the driver generates.
   *
   * All loads are plain parquet scans so Catalyst's predicate pushdown /
   * column pruning reach the file format; never cache here — callers
-  * decide lifetime.
+  * decide lifetime. Only the SCHEMA is remembered ([[schemaOf]]).
   */
 object Tables {
   val all: Seq[String] = Seq(
@@ -14,7 +18,85 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    parquet(spark, s"$sfDir/$name.parquet")
+
+  /** `spark.read.parquet(path)` with the schema supplied from
+    * [[schemaOf]]: same frame, same scan, but a warm read launches no
+    * schema-inference job. */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(schemaOf(spark, path)).parquet(path)
+
+  /** SESSION-SCOPED PARQUET SCHEMA RESOLUTION. A bare
+    * `spark.read.parquet(path)` infers the schema by reading footers in
+    * a Spark job, on every call — driver-side control that a warm
+    * request pays per table (three per `HierarchyAgg.salesFacts`). The
+    * inferred schema is remembered per (session, path) together with
+    * what it was inferred FROM:
+    *   - a fingerprint of the path's recursive file listing (every
+    *     file's path, length and mtime), taken with the Hadoop
+    *     `FileSystem` on the driver — no Spark job;
+    *   - the session's parquet-related conf entries (every set key
+    *     containing `parquet`, e.g. `legacy.parquet.nanosAsLong`,
+    *     `parquet.binaryAsString`).
+    * A read whose listing or conf differs re-infers and replaces the
+    * entry (one entry per path, so a directory rewritten in place
+    * never accumulates stale schemas); a stale schema is never
+    * served. A missing path, a glob, or a path holding no files falls
+    * through to the plain inferring read, so its error is Spark's own.
+    * Directories whose listing changes on every write (the MV stores)
+    * gain nothing here and keep their plain read.
+    */
+  def schemaOf(spark: SparkSession, path: String): StructType =
+    listingFingerprint(spark, path) match {
+      case None => spark.read.parquet(path).schema
+      case Some(listing) =>
+        val conf = parquetConf(spark)
+        val slot = schemas(spark, path)(new AtomicReference[Resolved]())
+        val cur = slot.get
+        if (cur != null && cur.listing == listing && cur.conf == conf)
+          cur.schema
+        else {
+          val schema = spark.read.parquet(path).schema
+          slot.set(Resolved(listing, conf, schema))
+          schema
+        }
+    }
+
+  private final case class Resolved(listing: String,
+      conf: Seq[(String, String)], schema: StructType)
+
+  private val schemas = new SessionCache[String, AtomicReference[Resolved]]()
+
+  private def parquetConf(spark: SparkSession): Seq[(String, String)] =
+    spark.conf.getAll.iterator
+      .filter(_._1.toLowerCase(java.util.Locale.ROOT).contains("parquet"))
+      .toSeq.sorted
+
+  /** SHA-256 over the sorted (path, length, mtime) of every file under
+    * `path`; None when the path is a glob, cannot be listed, or holds
+    * no files. */
+  private def listingFingerprint(spark: SparkSession, path: String)
+      : Option[String] =
+    if (path.exists("*?[{\\".contains(_))) None
+    else {
+      val all = try {
+        val p = new Path(path)
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        def files(st: FileStatus): Iterator[FileStatus] =
+          if (st.isDirectory) fs.listStatus(st.getPath).iterator.flatMap(files)
+          else Iterator(st)
+        files(fs.getFileStatus(p)).toVector
+      } catch {
+        case _: java.io.IOException | _: IllegalArgumentException => Vector.empty
+      }
+      if (all.isEmpty) None
+      else {
+        val md = java.security.MessageDigest.getInstance("SHA-256")
+        all.map(f => s"${f.getPath}\t${f.getLen}\t${f.getModificationTime}")
+          .sorted.foreach(e => md.update((e + "\n").getBytes("UTF-8")))
+        Some(md.digest().map("%02x".format(_)).mkString)
+      }
+    }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")

@@ -376,27 +376,40 @@ object Olap {
   }
 
   /** ABC / Pareto classification summary (q64): entities ranked by
-    * `revCol` desc (ties by `idCol` asc), classified by 9-dp-rounded
+    * `centsCol` desc (ties by `idCol` asc), classified by 9-dp-rounded
     * cumulative revenue share — A ≤ `aCut`, B ≤ `bCut`, C the rest —
     * and summarized per class. The cumulative fold runs through
     * [[rangedGlobal]] (r22): entity-grain, but no longer single-task.
-    * Callers must feed order-free-deterministic revenues (integer-cent
-    * sums) so the fold sees identical values on any engine.
+    * `centsCol` must be an exact integer amount (integral or scale-0
+    * decimal, e.g. cents): rangedGlobal's per-partition sums and
+    * offsets then add associatively, so `__share` — and the class at a
+    * cut — cannot depend on shuffle arrival order. Division (share,
+    * and `revenue` in units of cents/100) happens only at readout.
     */
-  def abcSummary(byEntity: DataFrame, idCol: String, revCol: String,
+  def abcSummary(byEntity: DataFrame, idCol: String, centsCol: String,
       aCut: Double = 0.80, bCut: Double = 0.95): DataFrame = {
+    import org.apache.spark.sql.types._
+    byEntity.schema(centsCol).dataType match {
+      case ByteType | ShortType | IntegerType | LongType =>
+      case d: DecimalType if d.scale == 0 =>
+      case other => throw new IllegalArgumentException(
+        s"abcSummary: $centsCol must be an exact integer amount (e.g. " +
+          s"cents), got $other — a floating sum depends on shuffle order")
+    }
     val (ranked, c) = rangedGlobal(byEntity,
-      Seq(col(revCol).desc, col(idCol)), Some(col(revCol)))
-    val totAll = c.agg(sum(revCol).as("__totsh"))
+      Seq(col(centsCol).desc, col(idCol)), Some(col(centsCol)))
+    val totAll = c.agg(sum(centsCol).as("__totsh"))
     val classed = ranked
       .crossJoin(broadcast(totAll))
-      .withColumn("__share", round(col("__cum") / col("__totsh"), 9))
+      .withColumn("__share", round(
+        col("__cum").cast("double") / col("__totsh").cast("double"), 9))
       .withColumn("abc_class",
         when(col("__share") <= aCut, lit("A"))
           .when(col("__share") <= bCut, lit("B")).otherwise(lit("C")))
-    val tot = classed.agg(round(sum(revCol), 2).as("__tot"))
+    def dollars(c: Column): Column = round(c.cast("double") / 100.0, 2)
+    val tot = totAll.select(dollars(col("__totsh")).as("__tot"))
     classed.groupBy("abc_class")
-      .agg(count(lit(1)).as("n_parts"), round(sum(revCol), 2).as("revenue"))
+      .agg(count(lit(1)).as("n_parts"), dollars(sum(centsCol)).as("revenue"))
       .crossJoin(broadcast(tot))
       .select(col("abc_class"), col("n_parts"), col("revenue"),
         round(col("revenue") / col("__tot"), 6).as("pct"))

@@ -1622,16 +1622,17 @@ object OlapQueries {
     // rounds to integer cents first and part revenue is a Long sum
     // (order-free, exact — a double sum rounded at the part grain
     // flips on .005 boundaries with aggregation order); the cumulative
-    // fold then runs over identical doubles in the identical
-    // (revenue desc, part) order, and the class compare uses the
-    // 9-dp-rounded share. The global window runs at part grain
-    // (dimension-sized); facts pay one groupBy
+    // fold also sums Long cents (its partition partials arrive in
+    // shuffle order, so only an exact sum is run-independent) and
+    // divides only at readout; the class compare uses the 9-dp-rounded
+    // share. The global window runs at part grain (dimension-sized);
+    // facts pay one groupBy
     "q64_abc_pareto" -> ((s, d) => {
       val byPart = Tables.lineitem(s, d)
         .groupBy("l_partkey")
-        .agg((sum(floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-            * 100.0 + 0.5).cast("long")).cast("double") / 100.0).as("rev"))
-      Olap.abcSummary(byPart, "l_partkey", "rev")
+        .agg(sum(floor(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
+            * 100.0 + 0.5).cast("long")).as("cents"))
+      Olap.abcSummary(byPart, "l_partkey", "cents")
     }),
 
     // CDC APPLY (the lakehouse MERGE materialization): a base snapshot

@@ -936,34 +936,8 @@ object StreamingOpsSinks {
     val (fs, out) = fsFor(spark, outDir)
     require(fs.exists(out),
       s"MV store $outDir has no committed batches yet — nothing to compact")
-    // create-exclusive concurrency fence. ATOMICITY CAVEAT (r21,
-    // ADVICE r20): create(path, overwrite=false) is atomic on HDFS
-    // and local filesystems but NOT guaranteed on object stores
-    // (S3A/GCS) — two compactors racing a store on such a filesystem
-    // can both pass the fence; pair the store with a real lock
-    // service there. Only FileAlreadyExistsException means "locked";
-    // any other IOException (transient FS failure) propagates as
-    // itself instead of masquerading as a lock conflict.
     val lock = new org.apache.hadoop.fs.Path(out, ".graft-compact-lock")
-    def lockConflict(): Nothing = throw new IllegalStateException(
-      s"MV store $outDir is locked by another compaction ($lock exists). " +
-        "If no compactor is alive this is a stale lock from a crashed " +
-        "run — the store is consistent (recovery is the manifest swap, " +
-        "not the lock); delete the lock file and re-run.")
-    val lockStream =
-      try fs.create(lock, false)
-      catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
-             _: java.nio.file.FileAlreadyExistsException => lockConflict()
-        // older Hadoop impls / some connectors signal the conflict as a
-        // plain IOException (ADVICE r21 #4): if the lock demonstrably
-        // exists, it IS the conflict — keep the recovery guidance;
-        // genuinely transient failures still propagate as themselves
-        case e: java.io.IOException =>
-          val exists = try fs.exists(lock) catch { case _: Throwable => false }
-          if (exists) lockConflict() else throw e
-      }
-    lockStream.close()
+    acquireCompactLock(fs, lock, outDir)
     try {
       finishPendingSwap(fs, out) // complete a crashed predecessor first
       val store = spark.read.parquet(outDir)
@@ -1046,6 +1020,52 @@ object StreamingOpsSinks {
       finishPendingSwap(fs, out)
       sfs.delete(stagingP, true)
     } finally fs.delete(lock, false)
+  }
+
+  /** The compaction's create-exclusive concurrency fence.
+    * ATOMICITY CAVEAT (r21, ADVICE r20): create(path, overwrite=false)
+    * is atomic on HDFS and local filesystems but NOT guaranteed on
+    * object stores (S3A/GCS) — two compactors racing a store on such a
+    * filesystem can both pass the fence; pair the store with a real
+    * lock service there. FileAlreadyExistsException means "locked".
+    * Older Hadoop impls / some connectors signal the conflict as a
+    * plain IOException (ADVICE r21 #4), and a create can also fail
+    * transiently AFTER it made the file: the plain-IOException path
+    * therefore checks whether the lock existed BEFORE this attempt.
+    * If it did, it is another compactor's (or a crashed run's) lock.
+    * If it appeared during the failed attempt, it may be this call's
+    * own half-created file — it cannot be told apart from a racing
+    * compactor's fresh lock, so it is NOT deleted (that could admit a
+    * second compactor); the error says so and names the file. With
+    * no lock on disk the failure propagates as itself.
+    */
+  private[graft] def acquireCompactLock(fs: org.apache.hadoop.fs.FileSystem,
+      lock: org.apache.hadoop.fs.Path, outDir: String): Unit = {
+    def lockConflict(): Nothing = throw new IllegalStateException(
+      s"MV store $outDir is locked by another compaction ($lock exists). " +
+        "If no compactor is alive this is a stale lock from a crashed " +
+        "run — the store is consistent (recovery is the manifest swap, " +
+        "not the lock); delete the lock file and re-run.")
+    def lockExists(): Boolean =
+      try fs.exists(lock) catch { case _: java.io.IOException => false }
+    val existedBefore = lockExists()
+    val lockStream =
+      try fs.create(lock, false)
+      catch {
+        case _: org.apache.hadoop.fs.FileAlreadyExistsException |
+             _: java.nio.file.FileAlreadyExistsException => lockConflict()
+        case e: java.io.IOException =>
+          if (existedBefore) lockConflict()
+          else if (lockExists()) throw new IllegalStateException(
+            s"could not take the compaction lock of MV store $outDir: " +
+              s"${e.getMessage}. The lock file $lock now exists and may " +
+              "have been created by this failed attempt itself; if no " +
+              "other compactor is alive, delete it and re-run (the store " +
+              "is consistent — recovery is the manifest swap, not the " +
+              "lock).", e)
+          else throw e
+      }
+    lockStream.close()
   }
 
   /** Read a [[streamMvFoldToParquet]] store: merge the batch partials
@@ -1343,7 +1363,7 @@ object StreamingQueries {
     java.nio.file.Files.createSymbolicLink(
       dir.resolve("events.parquet"),
       java.nio.file.Paths.get(s"$sfDir/events.parquet"))
-    val schema = spark.read.parquet(s"$sfDir/events.parquet").schema
+    val schema = Tables.schemaOf(spark, s"$sfDir/events.parquet")
     val raw = spark.readStream.schema(schema).parquet(dir.toString)
     // ONE ts normalization for batch and stream: Tables.normalizeTs
     // branches on the physical encoding (nanos-long / NTZ / timestamp),
@@ -1482,7 +1502,7 @@ object StreamingQueries {
       java.nio.file.Files.createSymbolicLink(
         dir.resolve("events.parquet"),
         java.nio.file.Paths.get(s"$d/events.parquet"))
-      val schema = s.read.parquet(s"$d/events.parquet").schema
+      val schema = Tables.schemaOf(s, s"$d/events.parquet")
       val out = java.nio.file.Files
         .createTempDirectory("graft_hist_sink").resolve("out").toString
       val ckpt = StreamingQueries.ckptScratchDir("graft_hist_ckpt")
@@ -1762,7 +1782,7 @@ object StreamingQueries {
     "st9_incremental_rollup_stream" -> ((s, d) => {
       val adim = graft.operators.HierarchyQueries.dimension(s, d).aggregationDim
       val dir = mvStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schemaOf(s, dir)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       var mv: DataFrame = null
@@ -1792,7 +1812,7 @@ object StreamingQueries {
     "st23_stream_distinct_mv" -> ((s, d) => {
       val adim = graft.operators.HierarchyQueries.dimension(s, d).aggregationDim
       val dir = mvStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schemaOf(s, dir)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       var mv: DataFrame = null
@@ -1825,7 +1845,7 @@ object StreamingQueries {
       val docs = Tables.documents(s, d)
       val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
       val dir = ndStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schemaOf(s, dir)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       var acc: DataFrame = null
@@ -1862,7 +1882,7 @@ object StreamingQueries {
       val docs = Tables.documents(s, d)
       val eval = docs.filter(pmod(col("doc_id"), lit(50)) === 0)
       val dir = decontamStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schemaOf(s, dir)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       var acc: DataFrame = null
@@ -1899,14 +1919,14 @@ object StreamingQueries {
     // runs before a scraped image reaches training storage.
     "st35_stream_subimage" -> ((s, d) => {
       val dir = tilesStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schemaOf(s, dir)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       var acc: DataFrame = null
       val partsWas = s.conf.get("spark.sql.shuffle.partitions")
       s.conf.set("spark.sql.shuffle.partitions", "8")
       val catalogTiles = graft.operators.Multimodal
-        .imageTiles(s, s.read.parquet(dir), patch = 4).toDF()
+        .imageTiles(s, Tables.parquet(s, dir), patch = 4).toDF()
       val rawIndex = graft.operators.Multimodal
         .subimageIndex(catalogTiles)
       val index = graft.Materialize.leaf(rawIndex)
@@ -1942,7 +1962,7 @@ object StreamingQueries {
     // #1 operational failure.
     "st36_stream_quarantine" -> ((s, d) => {
       val dir = quarantineStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schemaOf(s, dir)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       var acc: DataFrame = null
@@ -1961,7 +1981,7 @@ object StreamingQueries {
       } finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
       if (acc == null)
         graft.operators.Multimodal.extractFeaturesQuarantine(s,
-          s.read.parquet(dir).limit(0),
+          Tables.parquet(s, dir).limit(0),
           new graft.operators.Multimodal.BmpCodec).toDF()
       else acc
     }),
@@ -1982,7 +2002,7 @@ object StreamingQueries {
       import graft.operators.{MvFold, MvSum, MvCount}
       import graft.functions.TextFunctions._
       val dir = docsStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schemaOf(s, dir)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       def perDoc(df: DataFrame): DataFrame = df
@@ -2068,7 +2088,7 @@ object StreamingQueries {
     "st37_stream_mv_fold" -> ((s, d) => {
       import graft.operators.{MvFold, MvSum, MvCount, MvBitmapDistinct}
       val dir = ordersMvStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schemaOf(s, dir)
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(dir)
       val keys = Seq("o_orderpriority", "order_year")
@@ -2089,7 +2109,7 @@ object StreamingQueries {
           })
       } finally s.conf.set("spark.sql.shuffle.partitions", partsWas)
       if (mv == null)
-        mv = MvFold.build(s.read.parquet(dir).limit(0), keys, measures)
+        mv = MvFold.build(Tables.parquet(s, dir).limit(0), keys, measures)
       MvFold.read(mv, keys, measures)
         .select(col("o_orderpriority"), col("order_year"),
           round(col("sum_cents").cast("double") / 100.0, 2).as("sum_price"),
@@ -2108,7 +2128,7 @@ object StreamingQueries {
     "st38_stream_mv_sink" -> ((s, d) => {
       import graft.operators.{MvSum, MvCount, MvBitmapDistinct}
       val dir = ordersMvStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schemaOf(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_mvsink").resolve("out").toString
       val ckpt = StreamingQueries.ckptScratchDir("graft_mvsink_ckpt")
@@ -2140,7 +2160,7 @@ object StreamingQueries {
       import graft.operators.{MvSum, MvCount}
       val adim = graft.operators.HierarchyQueries.dimension(s, d).aggregationDim
       val dir = mvStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schemaOf(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_hrmv").resolve("out").toString
       val ckpt = StreamingQueries.ckptScratchDir("graft_hrmv_ckpt")
@@ -2171,7 +2191,7 @@ object StreamingQueries {
       import graft.operators.{MvSum, MvCount}
       val adim = graft.operators.HierarchyQueries.dimension(s, d).aggregationDim
       val dir = mvRetractStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schemaOf(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_rtmv").resolve("out").toString
       val ckpt = StreamingQueries.ckptScratchDir("graft_rtmv_ckpt")
@@ -2201,7 +2221,7 @@ object StreamingQueries {
     // append-only; retraction stays q84's batch-side contract).
     "st40_stream_quantile_mv" -> ((s, d) => {
       val dir = ordersMvStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schemaOf(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_histmv").resolve("out").toString
       val ckpt = StreamingQueries.ckptScratchDir("graft_histmv_ckpt")
@@ -2226,7 +2246,7 @@ object StreamingQueries {
     // derivation over orders minus the retracted slice.
     "st43_stream_quantile_retraction" -> ((s, d) => {
       val dir = ordersRetractStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schemaOf(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_histrt").resolve("out").toString
       val ckpt = StreamingQueries.ckptScratchDir("graft_histrt_ckpt")
@@ -2254,7 +2274,7 @@ object StreamingQueries {
       val docs = Tables.documents(s, d)
       val corpus = docs.filter(pmod(col("doc_id"), lit(5)) =!= 0)
       val dir = ndStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schemaOf(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_nd_sink").resolve("out").toString
       val ckpt = StreamingQueries.ckptScratchDir("graft_nd_ckpt")
@@ -2277,7 +2297,7 @@ object StreamingQueries {
       val emb = Tables.embeddings(s, d)
       val corpusEmb = emb.filter(pmod(col("vec_id"), lit(5)) =!= 0)
       val dir = embStreamDir(s, d)
-      val schema = s.read.parquet(dir).schema
+      val schema = Tables.schemaOf(s, dir)
       val out = java.nio.file.Files
         .createTempDirectory("graft_sem_sink").resolve("out").toString
       val ckpt = StreamingQueries.ckptScratchDir("graft_sem_ckpt")

@@ -732,6 +732,50 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("PushedFilters"), p.take(2000))
   }
 
+  test("q64/q71/q78: each ranked global runs ONE range exchange that the stats and rank branches both read") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+    // Olap.rangedGlobal derives per-partition offsets (stats branch)
+    // and local ranks (rank branch) from the same range shuffle; both
+    // must read ONE physical exchange, or the sampled range bounds —
+    // and so the __pid each row gets — could differ between branches
+    // and the offsets would silently mis-rank. Walk the FINAL adaptive
+    // plan (after execution), through query stages.
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case r: ReusedExchangeExec => Nil
+      case _ => p.children.flatMap(nodes)
+    })
+    def isRange(p: SparkPlan): Boolean = p match {
+      case e: ShuffleExchangeExec =>
+        e.outputPartitioning.isInstanceOf[RangePartitioning]
+      case _ => false
+    }
+    // q78 ranks two years, so it runs two ranked globals
+    for ((name, calls) <- Seq("q64_abc_pareto" -> 1, "q71_decile_lift" -> 1,
+        "q78_decile_transition" -> 2)) {
+      val df = SparkEntry.queries(name)(spark, sf)
+      df.collect()
+      val all = nodes(df.queryExecution.executedPlan)
+      val ranges = all.filter(isRange)
+      val reused = all.collect {
+        case r: ReusedExchangeExec if isRange(r.child) => r.child }
+      val shown = df.queryExecution.executedPlan.toString()
+      // every other reader (the stats branch, plus whole-subtree
+      // copies such as q64's revenue total over the classed frame) is
+      // a ReusedExchange of one of those `calls` exchanges
+      assert(ranges.size == calls,
+        s"$name executes ${ranges.size} range exchanges, want $calls:\n$shown")
+      assert(reused.map(_.canonicalized).toSet ==
+          ranges.map(_.canonicalized).toSet,
+        s"$name: not every range exchange is shared by its stats and " +
+          s"rank branches:\n$shown")
+    }
+  }
+
   test("q1: aggregation runs inside whole-stage codegen") {
     val df = SparkEntry.queries("q1_agg")(spark, sf)
     // AQE's pre-execution plan string hides codegen stages; ask for

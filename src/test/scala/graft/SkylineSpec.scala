@@ -51,8 +51,8 @@ class SkylineSpec extends SparkSpec {
 
   test("abcSummary: planted 80/15/5 classifies exactly one part per class") {
     import spark.implicits._
-    val byPart = Seq((1L, 80.0), (2L, 15.0), (3L, 5.0)).toDF("id", "rev")
-    val got = Olap.abcSummary(byPart, "id", "rev")
+    val byPart = Seq((1L, 8000L), (2L, 1500L), (3L, 500L)).toDF("id", "cents")
+    val got = Olap.abcSummary(byPart, "id", "cents")
       .as[(String, Long, Double, Double)].collect().toSet
     assert(got === Set(("A", 1L, 80.0, 0.8), ("B", 1L, 15.0, 0.15),
       ("C", 1L, 5.0, 0.05)))
@@ -61,10 +61,18 @@ class SkylineSpec extends SparkSpec {
   test("abcSummary: boundary part (cum share exactly at the cut) stays in the class") {
     import spark.implicits._
     // two parts of 40 each reach exactly 0.8 cumulative -> both A
-    val byPart = Seq((1L, 40.0), (2L, 40.0), (3L, 20.0)).toDF("id", "rev")
-    val got = Olap.abcSummary(byPart, "id", "rev").collect()
+    val byPart = Seq((1L, 4000L), (2L, 4000L), (3L, 2000L)).toDF("id", "cents")
+    val got = Olap.abcSummary(byPart, "id", "cents").collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got === Map("A" -> 2L, "C" -> 1L))
+  }
+
+  test("abcSummary refuses a floating amount (its running sum would depend on shuffle order)") {
+    import spark.implicits._
+    val byPart = Seq((1L, 80.0), (2L, 20.0)).toDF("id", "rev")
+    val e = intercept[IllegalArgumentException](
+      Olap.abcSummary(byPart, "id", "rev"))
+    assert(e.getMessage.contains("exact integer amount"), e.getMessage)
   }
 
   test("cdcApply: update applies, delete erases, re-insert revives, untouched keeps") {

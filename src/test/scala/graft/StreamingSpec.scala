@@ -852,6 +852,44 @@ class StreamingSpec extends SparkSpec {
     assert(!got.contains("ORPHAN"))
   }
 
+  test("compaction lock: a create that fails after making the lock says the lock may be its own") {
+    import org.apache.hadoop.fs.{FSDataOutputStream, Path, RawLocalFileSystem}
+    // a filesystem whose exclusive create fails with a plain
+    // IOException, optionally AFTER creating the file
+    final class FailingCreate(leaveFile: Boolean) extends RawLocalFileSystem {
+      override def create(f: Path, overwrite: Boolean): FSDataOutputStream = {
+        if (leaveFile) super.create(f, overwrite).close()
+        throw new java.io.IOException("injected create failure")
+      }
+    }
+    def fs(leaveFile: Boolean) = {
+      val f = new FailingCreate(leaveFile)
+      f.initialize(java.net.URI.create("file:///"),
+        new org.apache.hadoop.conf.Configuration())
+      f
+    }
+    def freshLock() = new Path(java.nio.file.Files
+      .createTempDirectory("compact_lock").toString, ".graft-compact-lock")
+    val acquire = graft.streaming.StreamingOpsSinks.acquireCompactLock _
+    // the failed attempt made the lock: the error names it as possibly
+    // this attempt's own, keeps the cause, and leaves the file alone
+    val own = freshLock()
+    val e1 = intercept[IllegalStateException](acquire(fs(true), own, "store"))
+    assert(e1.getMessage.contains("may have been created by this failed attempt"),
+      e1.getMessage)
+    assert(e1.getMessage.contains(own.toString), e1.getMessage)
+    assert(e1.getCause.getMessage == "injected create failure")
+    assert(new java.io.File(own.toString).exists())
+    // no lock on disk: the transient failure propagates as itself
+    val e2 = intercept[java.io.IOException](acquire(fs(false), freshLock(), "store"))
+    assert(e2.getMessage == "injected create failure")
+    // a lock that was there BEFORE the attempt is a conflict
+    val held = freshLock()
+    assert(new java.io.File(held.toString).createNewFile())
+    val e3 = intercept[IllegalStateException](acquire(fs(false), held, "store"))
+    assert(e3.getMessage.contains("locked by another compaction"), e3.getMessage)
+  }
+
   test("compaction is fenced: a concurrent compactor is refused, the lock clears on completion (r19 verdict #3)") {
     val (out, _, _, keys, measures) = buildMvStore()
     def readOff() = graft.streaming.StreamingOpsSinks

@@ -75,6 +75,118 @@ class TablesSpec extends SparkSpec {
     }
   }
 
+  // what each loader applies on top of the raw parquet read
+  private def normalized(name: String, raw: org.apache.spark.sql.DataFrame) =
+    name match {
+      case "orders" => Tables.normalizeNtz(raw, "o_orderdate")
+      case "lineitem" => Tables.normalizeNtz(raw, "l_shipdate")
+      case "events" => Tables.normalizeTs(raw)
+      case _ => raw
+    }
+
+  test("resolved schemas equal Spark's inferred schemas, nullability included") {
+    assert(sfDirs.nonEmpty)
+    for (d <- sfDirs; name <- Tables.all) {
+      val path = s"$d/$name.parquet"
+      val inferred = spark.read.parquet(path)
+      assert(Tables.schemaOf(spark, path) == inferred.schema, path)
+      assert(Tables.load(spark, d, name).schema == inferred.schema, path)
+      assert(loader(name)(spark, d).schema ==
+        normalized(name, inferred).schema, path)
+    }
+  }
+
+  /** Spark jobs started while `body` runs (listener bus drained before
+    * and after, so the count is exact). */
+  private def jobsDuring(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val n = new java.util.concurrent.atomic.AtomicInteger(0)
+    val l = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.ListenerBusDrain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try { body; org.apache.spark.ListenerBusDrain(spark.sparkContext) }
+    finally spark.sparkContext.removeSparkListener(l)
+    n.get()
+  }
+
+  test("a warm Tables.lineitem starts no Spark job") {
+    Tables.lineitem(spark, sf).schema // warm: the first read infers
+    val warm = jobsDuring(Tables.lineitem(spark, sf).schema)
+    assert(warm == 0, s"warm Tables.lineitem started $warm Spark jobs")
+    // control: the counter does see the inferring read's footer job
+    val bare = jobsDuring(spark.read.parquet(s"$sf/lineitem.parquet").schema)
+    assert(bare >= 1, "the job counter saw no job for a bare parquet read")
+  }
+
+  private def tempParquetDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).resolve("t").toString
+
+  test("a directory rewritten under the same path resolves to the new schema") {
+    import spark.implicits._
+    val dir = tempParquetDir("tables_rewrite")
+    Seq((1, "a"), (2, "b")).toDF("a", "b").write.parquet(dir)
+    assert(Tables.schemaOf(spark, dir).fieldNames.toSeq == Seq("a", "b"))
+    Seq((1L, 2.5, "x")).toDF("x", "y", "z").write.mode("overwrite").parquet(dir)
+    assert(Tables.schemaOf(spark, dir) == spark.read.parquet(dir).schema)
+    assert(Tables.schemaOf(spark, dir).fieldNames.toSeq == Seq("x", "y", "z"))
+    assert(Tables.parquet(spark, dir).as[(Long, Double, String)].collect()
+      .toSeq == Seq((1L, 2.5, "x")))
+    // a partitioned directory resolves like the inferring read too
+    val parted = tempParquetDir("tables_parted")
+    Seq((1L, "p", 7), (2L, "q", 8)).toDF("id", "s", "k")
+      .write.partitionBy("k").parquet(parted)
+    assert(Tables.schemaOf(spark, parted) == spark.read.parquet(parted).schema)
+    assert(Tables.parquet(spark, parted).schema ==
+      spark.read.parquet(parted).schema)
+  }
+
+  test("toggling spark.sql.parquet.binaryAsString re-infers the binary column") {
+    import spark.implicits._
+    // written with the bare parquet writer: Spark's own files carry the
+    // Spark schema in their footer, which overrides binaryAsString
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    val dir = tempParquetDir("tables_binary")
+    val pschema = org.apache.parquet.schema.MessageTypeParser.parseMessageType(
+      "message t { optional int64 id; optional binary payload; }")
+    val hconf = spark.sparkContext.hadoopConfiguration
+    val w = ExampleParquetWriter.builder(HadoopOutputFile.fromPath(
+        new org.apache.hadoop.fs.Path(s"$dir/part-0.parquet"), hconf))
+      .withType(pschema).withConf(hconf).build()
+    try w.write(new SimpleGroupFactory(pschema).newGroup()
+      .append("id", 1L).append("payload", "hi"))
+    finally w.close()
+    val key = "spark.sql.parquet.binaryAsString"
+    val was = spark.conf.getOption(key)
+    try {
+      assert(Tables.schemaOf(spark, dir)("payload").dataType == BinaryType)
+      spark.conf.set(key, "true")
+      assert(Tables.schemaOf(spark, dir)("payload").dataType == StringType)
+      assert(Tables.parquet(spark, dir).select("payload").as[String]
+        .collect().toSeq == Seq("hi"))
+      assert(Tables.schemaOf(spark, dir) == spark.read.parquet(dir).schema)
+      spark.conf.set(key, "false")
+      assert(Tables.schemaOf(spark, dir)("payload").dataType == BinaryType)
+    } finally was match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
+  test("a missing path fails with Spark's own error") {
+    val missing = java.nio.file.Files.createTempDirectory("tables_missing")
+      .resolve("nope.parquet").toString
+    val plain = intercept[Exception](spark.read.parquet(missing))
+    val viaTables = intercept[Exception](Tables.parquet(spark, missing))
+    assert(viaTables.getClass == plain.getClass)
+    assert(viaTables.getMessage == plain.getMessage)
+  }
+
   test("normalizeTs folds all three known ts encodings to the same instants") {
     import spark.implicits._
     // 2024-03-01 12:34:56.789012 UTC, expressed three ways
